@@ -5,8 +5,10 @@ row counts (``/root/reference/src/replicator.py:69-81``, A2 in
 SURVEY.md §2.4).  We keep that and add the two stronger checks its
 design cannot do:
 
-* ``verify_diff`` — full row-level diff via left-anti joins both ways
-  (missing rows and extra rows), which a count check cannot see.
+* ``verify_diff`` — key-level diff in both directions (missing rows
+  and extra rows), which a count check cannot see: one full outer
+  join on the keys and one aggregate, the same numbers two left-anti
+  joins give.
 * ``table_checksum`` — order-insensitive per-table checksum: hash each
   row, XOR/sum-aggregate.  One scan, no shuffle beyond the final
   aggregate; at 100 TB this is the only row-level verification that
@@ -20,22 +22,45 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: the side markers of ``verify_diff``'s join
+_IN_SOURCE, _IN_TARGET = "__verify_in_source", "__verify_in_target"
 
-def verify_counts(source: DataFrame, target: DataFrame) -> dict:
-    """Count-equality check (parity: A2,
-    /root/reference/src/replicator.py:69-81)."""
-    sc, tc = source.count(), target.count()
+
+def verify_counts(
+    source: DataFrame | int, target: DataFrame | int
+) -> dict:
+    """Count-equality check (parity: A2, the reference's source/target
+    row-count comparison).  Either side may be a count the caller
+    already has (an ``Observation`` on the write, parquet footers);
+    only a ``DataFrame`` side runs a count job."""
+    sc, tc = (n if isinstance(n, int) else n.count()
+              for n in (source, target))
     return {"source_count": sc, "target_count": tc, "success": sc == tc}
 
 
 def verify_diff(
     source: DataFrame, target: DataFrame, keys: Sequence[str]
 ) -> dict:
-    """Row-level diff: keys present on one side only, via left-anti
-    joins in both directions.  Anti joins broadcast automatically when
-    one side is small; otherwise a single co-partitioned shuffle."""
-    missing = source.join(target, on=list(keys), how="left_anti").count()
-    extra = target.join(source, on=list(keys), how="left_anti").count()
+    """Key-level diff: how many rows of each side find no row with the
+    same keys on the other — exactly what ``left_anti`` joins both
+    ways count (a NULL key never matches; duplicates count per row).
+
+    One query: a full outer join on the keys, each side tagged with a
+    marker column, then one aggregate counts the rows whose other
+    marker is NULL.  That is one shuffle of each side's keys and no
+    broadcast or count jobs, against two anti-join queries.  Keys
+    duplicated on BOTH sides multiply in the join (d_s * d_t rows);
+    primary keys, the snapshot copy's diff keys, keep that at one."""
+    keys = list(keys)
+    joined = source.select(*keys, F.lit(True).alias(_IN_SOURCE)).join(
+        target.select(*keys, F.lit(True).alias(_IN_TARGET)),
+        on=keys, how="full_outer",
+    )
+    row = joined.agg(
+        F.count_if(F.col(_IN_TARGET).isNull()).alias("missing"),
+        F.count_if(F.col(_IN_SOURCE).isNull()).alias("extra"),
+    ).first()
+    missing, extra = int(row["missing"]), int(row["extra"])
     return {"missing_in_target": missing, "extra_in_target": extra,
             "success": missing == 0 and extra == 0}
 

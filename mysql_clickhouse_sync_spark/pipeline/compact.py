@@ -57,6 +57,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
+from ..sources.parquet import parquet_rows_exact
+
 
 @dataclass(frozen=True)
 class DataFile:
@@ -215,22 +217,6 @@ def plan_table_compaction(
     return CompactionPlan(table_path, bins, skipped)
 
 
-def _parquet_meta_rows(spark: SparkSession, path: str) -> int:
-    """Row count from the parquet FOOTER (pure metadata read — one
-    footer fetch, no Spark job, no data scan; the same number a
-    count(*) over the file returns)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    conf = spark._jsc.hadoopConfiguration()
-    footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-        conf, jpath
-    )
-    blocks = footer.getBlocks()
-    return sum(
-        blocks.get(i).getRowCount() for i in range(blocks.size())
-    )
-
-
 def _compact_one_bin(
     spark: SparkSession, bin_: CompactionBin, staging_root: str
 ) -> tuple[CompactionBin, str, int]:
@@ -261,7 +247,9 @@ def _compact_one_bin(
         if n.endswith(".parquet")
     ]
     assert len(part_files) == 1, part_files
-    n_out = _parquet_meta_rows(spark, part_files[0])
+    # a fresh footer read (never the memo); an unreadable footer
+    # (None) fails the same check, it never passes
+    n_out = parquet_rows_exact(spark, part_files[0], cached=False)
     if n_out != n_in:
         raise RuntimeError(
             f"compaction row-count mismatch: {n_in} in, {n_out} out"

@@ -562,10 +562,11 @@ def test_swap_directory_crash_window_restore_without_staging(tmp_path):
 
 
 def test_footer_row_count_matches_spark_count(spark, tmp_path):
-    """_parquet_meta_rows (the r14 one-job verify) must agree with a
-    Spark count over the same file."""
-    from mysql_clickhouse_sync_spark.pipeline.compact import (
-        _parquet_meta_rows,
+    """The footer reader compaction verifies with,
+    parquet_rows_exact(..., cached=False), must agree with a Spark
+    count over the same file."""
+    from mysql_clickhouse_sync_spark.sources.parquet import (
+        parquet_rows_exact,
     )
 
     out = str(tmp_path / "t")
@@ -576,4 +577,28 @@ def test_footer_row_count_matches_spark_count(spark, tmp_path):
         if n.endswith(".parquet")
     ]
     assert len(files) == 1
-    assert _parquet_meta_rows(spark, files[0]) == 1234
+    assert parquet_rows_exact(spark, files[0], cached=False) == 1234
+
+
+def test_bin_row_count_fails_on_wrong_or_unreadable_footer(
+    spark, tmp_path, monkeypatch
+):
+    """A staged file whose footer count disagrees with the rows the
+    write observed, or whose footer cannot be read (None), fails the
+    bin with the row-count error: neither may pass."""
+    import pytest
+
+    import mysql_clickhouse_sync_spark.pipeline.compact as compact_mod
+    from mysql_clickhouse_sync_spark.pipeline.compact import CompactionBin
+
+    src = str(tmp_path / "t")
+    spark.range(0, 300).repartition(3).write.parquet(src)
+    bin_ = CompactionBin("", tuple(list_data_files(src)))
+    staging = str(tmp_path / "staging")
+    assert compact_mod._compact_one_bin(spark, bin_, staging)[2] == 300
+    for footer, shown in ((lambda *a, **k: 299, "299 out"),
+                          (lambda *a, **k: None, "None out")):
+        monkeypatch.setattr(compact_mod, "parquet_rows_exact", footer)
+        with pytest.raises(RuntimeError, match=f"row-count mismatch: "
+                                               f"300 in, {shown}"):
+            compact_mod._compact_one_bin(spark, bin_, staging)

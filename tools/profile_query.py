@@ -16,6 +16,17 @@ _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _ROOT)
 
 
+def _job_seconds(store, jid: int) -> float:
+    """Completion minus submission time of one job, from the
+    application status store (filled with the UI off); NaN while
+    either time is unknown."""
+    job = store.job(jid)
+    start, end = job.submissionTime(), job.completionTime()
+    if not (start.isDefined() and end.isDefined()):
+        return float("nan")
+    return (end.get().getTime() - start.get().getTime()) / 1000.0
+
+
 def main() -> None:
     names = [a for a in sys.argv[1:] if not a.startswith("--")]
     repeat = 2
@@ -23,12 +34,13 @@ def main() -> None:
         if a.startswith("--repeat"):
             repeat = int(a.split("=", 1)[1])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     from mysql_clickhouse_sync_spark.session import get_spark
     from mysql_clickhouse_sync_spark.plans.registry import all_queries
 
-    spark = get_spark(f"local[{cpus}]")
+    # get_spark sizes local[N] from SPARK_GRAFT_CPUS itself
+    spark = get_spark("profile_query")
     sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
     qs = all_queries()
     for name in names:
         fn = qs[name].fn
@@ -56,13 +68,13 @@ def main() -> None:
                         continue
                     stages = list(ji.stageIds)
                     ntasks = 0
-                    dur = 0.0
                     for sid in stages:
                         si = tracker.getStageInfo(sid)
                         if si:
                             ntasks += si.numTasks
                     print(
                         f"   job {jid}: stages={len(stages)} tasks={ntasks}"
+                        f" dur={_job_seconds(store, jid):.3f}s"
                     )
         sys.stdout.flush()
 
